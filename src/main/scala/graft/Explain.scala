@@ -1,11 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Physical-plan inspection for the plan-shape assertions the engine is
-  * designed around (run: `sbt "runMain graft.Explain [sfDir] [query…]"`).
-  * Prints `explain("formatted")` so PushedFilters / ReadSchema /
-  * broadcast choices / WholeStageCodegen spans are visible. */
+  * designed around. Renders `explain("formatted")` so PushedFilters /
+  * ReadSchema / broadcast choices / WholeStageCodegen spans are visible.
+  *
+  * Run: `sbt "runMain graft.Explain [sfDir] [--out <dir>] [query…]"`.
+  * With no query names every registered query (plus [[innerPlans]]) is
+  * explained. Without `--out` the plans print to stdout; with it each
+  * plan is written to `<dir>/<query>.txt` (the `plans/<round>/`
+  * evidence files). Harness queries with several internal actions
+  * explain the plan of the RETURNED frame (the oracle surface); their
+  * job structure is what `graft.tools.Profile` measures. */
 object Explain {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions.col
@@ -42,21 +52,26 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val which = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (outDir, which) = args.drop(1).toList match {
+      case "--out" :: dir :: names => (Some(dir), names.toSet)
+      case names => (None, names.toSet)
+    }
+    val spark = Session.local("graft.Explain")
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     (SparkEntry.queries ++ innerPlans)
       .filter { case (name, _) => which.isEmpty || which.contains(name) }
       .toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+        val plan =
+          try fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+          catch { case e: Throwable => s"failed: ${e.getMessage}" }
+        outDir match {
+          case Some(d) =>
+            Files.writeString(Paths.get(d, s"$name.txt"), plan)
+            println(s"wrote $name (${plan.length} chars)")
+          case None => println(s"\n========== $name ==========\n$plan")
+        }
+        spark.catalog.clearCache()
       }
     spark.stop()
   }

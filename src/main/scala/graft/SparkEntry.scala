@@ -2,13 +2,11 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Harness contract — see SURVEY.md §7.
   *
-  * `queries` maps one named entry per implemented operator (SURVEY.md §2
-  * inventory + §7.5 extensions) to a `(session, sfDir) => DataFrame`;
-  * `oracleSql` carries the DuckDB-runnable ANSI equivalent for every
-  * SQL-expressible entry. Queries are assembled from the per-domain
-  * modules under `graft.queries`.
+  * Every query is declared once, as a [[Query]] in its domain module
+  * under `graft.queries`; `queries` and `oracleSql` are projections of
+  * that one registry.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -18,15 +16,17 @@ object SparkEntry {
     RefQueries.medallion(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val registry: Seq[Query] =
     RefQueries.queries ++ RelationalQueries.queries ++ EventQueries.queries ++
       TextQueries.queries ++ SimilarityQueries.queries ++
       AdvancedQueries.queries ++ CurationQueries.queries
 
+  /** Each query's `build` function over `(session, sfDir)`. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RefQueries.oracleSql ++ RelationalQueries.oracleSql ++ EventQueries.oracleSql ++
-      TextQueries.oracleSql ++ SimilarityQueries.oracleSql ++
-      AdvancedQueries.oracleSql ++ CurationQueries.oracleSql
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -528,13 +528,7 @@ object ScaleRehearsal {
       }))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft.tools.ScaleRehearsal")
 
     val sf1Dir = "target/sf1"
     if (!new java.io.File(s"$sf1Dir/embeddings.parquet").exists() ||

@@ -50,10 +50,11 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
         s.sql(s"SELECT xxhash64($i, xxhash64('a b c')) AS h").collect()(0).getLong(0)
       }
     } finally {
-      // restore the suite-shared session instead of stopping the
-      // underlying (shared) SparkContext
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+      // restore the suite-shared session state exactly (an absent one
+      // stays absent) instead of stopping the underlying shared
+      // SparkContext
+      prevDefault.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+      prevActive.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
     }
   }
 }

@@ -30,16 +30,8 @@ class GoldJdbcSpec extends SparkSpec {
     * Both properties are read once at engine boot, so they are set
     * before the first connection (this spec is the only Derby user). */
   private lazy val url = {
-    val base = java.nio.file.Paths.get("target", "test-tmp", "gold-jdbc")
     // best-effort sweep of prior runs' leftovers (locked files just stay)
-    if (java.nio.file.Files.isDirectory(base)) {
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) { val fs = f.listFiles(); if (fs != null) fs.foreach(rmrf) }
-        f.delete(); ()
-      }
-      try rmrf(base.toFile) catch { case _: Exception => }
-    }
-    java.nio.file.Files.createDirectories(base)
+    val base = java.nio.file.Paths.get(freshDir("gold-jdbc"))
     val dir = java.nio.file.Files.createTempDirectory(base, "run-").toAbsolutePath
     System.setProperty("derby.system.home", dir.toString)
     System.setProperty("derby.stream.error.file",

@@ -80,8 +80,7 @@ for name in sorted(oracles):
   private lazy val probeLines: Option[Map[String, (String, String)]] = {
     if (!new java.io.File(sfDir).isDirectory) None
     else {
-      val dir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("target", "test-tmp", "oracle-canary"))
+      val dir = java.nio.file.Paths.get(graft.SparkSpec.tmpDir("oracle-canary"))
       val oraclesJson = SparkEntry.oracleSql
         .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
       val jsonPath = dir.resolve("oracles.json")

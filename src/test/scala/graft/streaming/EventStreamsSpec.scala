@@ -81,8 +81,9 @@ class EventStreamsSpec extends SparkSpec {
 
   "file-source streaming" should "run csv readStream → parquet sink with checkpoint" in {
     import spark.implicits._
-    val base = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get("target", "test-tmp", "stream")).toString
+    // cleared first: a leftover checkpoint would make the resumed query
+    // treat both batches as already committed and write nothing
+    val base = freshDir("stream")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
     java.nio.file.Files.writeString(

@@ -51,8 +51,6 @@ class CollectCoverageSpec extends SparkSpec {
       "1-row JVM warm-up aggregate"),
     "graft/tools/Profile.scala" -> (1,
       "1-row JVM warm-up aggregate (diagnostic tool, never in gates)"),
-    "graft/tools/ProfileJobs.scala" -> (1,
-      "1-row JVM warm-up aggregate (diagnostic tool, never in gates)"),
     "graft/pipeline/PgGold.scala" -> (1,
       "protocol-fidelity leg: dims + k-row RETURNING probes only " +
         "(dimension-/k-sized); main AND facts route through " +

@@ -41,4 +41,24 @@ class SourceHygieneSpec extends AnyFlatSpec with Matchers {
     withClue("files grep would silently skip as binary:\n" +
       offenders.mkString("\n") + "\n") { offenders shouldBe empty }
   }
+
+  /** Every spec temp path goes through `SparkSpec.tmpDir` /
+    * `freshDir`, the one place that knows the temp root. A
+    * hand-built path there bypasses `freshDir`'s clearing, and a
+    * streaming checkpoint left over from an earlier run then makes a
+    * re-run silently process nothing. */
+  it should "build no spec temp path outside SparkSpec" in {
+    val root = Seq("test", "tmp").mkString("-")
+    val literal = ("\"[^\"\n]*" + root).r
+    val offenders = walk("src/test", ".scala")
+      .filterNot(_.getFileName.toString == "SparkSpec.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if literal.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }
+    withClue("use tmpDir / freshDir instead:\n" + offenders.mkString("\n") + "\n") {
+      offenders shouldBe empty
+    }
+  }
 }
